@@ -351,9 +351,9 @@ def test_asof_map_payload_supported(spark, strategy):
 @pytest.mark.parametrize("strict", [True, False])
 def test_pit_match_multi_equals_per_feature(spark, strict):
     """The single-pass multi-feature plan must agree exactly with N
-    independent pit_match calls — including MIXED per-feature embargos
-    (multi applies the embargo on the feature side, ft + e < lt; the
-    per-feature plan shifts the label side, ft < lt - e)."""
+    independent range-join pit_match calls — including MIXED per-feature
+    embargos (the union kernel applies the embargo on the feature side,
+    ft + e < lt; the range join compares ft < lt - e)."""
     import random
     from datetime import datetime, timedelta
 
@@ -414,6 +414,7 @@ def test_pit_match_multi_equals_per_feature(spark, strict):
             embargo_s=embargos[fi],
             lookback_s=lookback,
             strict=strict,
+            strategy="join",
         )
         expected = expected.join(m, ROW_ID, "left")
 

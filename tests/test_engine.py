@@ -293,7 +293,8 @@ def test_split_overlap_error(spark, users_feat_labels):
         )
 
 
-def test_duplicate_detection_error_and_keep_any(spark, tmp_path):
+@pytest.mark.parametrize("skew_bucket", [None, "30d"])
+def test_duplicate_detection_error_and_keep_any(spark, tmp_path, skew_bucket):
     dup = spark.createDataFrame(
         [(1, dt.datetime(2024, 1, 1), 1.0), (1, dt.datetime(2024, 1, 1), 2.0)],
         "user_id int, ts timestamp_ntz, v double",
@@ -312,14 +313,21 @@ def test_duplicate_detection_error_and_keep_any(spark, tmp_path):
     feat_err = tf.Feature(
         tf.Source(p, keys="user_id", timestamp="ts"), columns="v", name="f"
     )
+    # The duplicate count rides the (bucketed or plain) union window: the
+    # pre-pass only checks the source's NULL-key/NULL-time subset.
+    progress: list[str] = []
     with pytest.raises(TimefenceDuplicateError):
-        tf.build(labels, [feat_err], spark=spark)
+        tf.build(
+            labels, [feat_err], spark=spark, skew_bucket=skew_bucket,
+            progress=progress.append,
+        )
+    assert any("(1 in-window, NULL subset only)" in m for m in progress), progress
     # With an output path the in-window duplicate count lands with the
     # write action (round 13); the error must still abort the build AND
     # remove the output.
     out = tmp_path / "dup_out.parquet"
     with pytest.raises(TimefenceDuplicateError):
-        tf.build(labels, [feat_err], str(out), spark=spark)
+        tf.build(labels, [feat_err], str(out), spark=spark, skew_bucket=skew_bucket)
     assert not out.exists()
 
 
@@ -981,34 +989,3 @@ def test_build_tunes_shuffle_partitions_for_small_inputs(
     )
     assert not [l for l in res2.sql.splitlines() if "tuned" in l]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_build_raises_shuffle_partitions_for_big_inputs(
-    spark, monkeypatch, users_feat_labels
-):
-    """Round 14 (VERDICT r13 item 8): the same input-bytes sizing also
-    RAISES the shuffle width when the session's configured partitions
-    would leave each union/window sort task fatter than the per-task
-    target — the 10M x 10 build at 32 partitions spilled 34 GB in its
-    window stage; at an input-derived width it spills zero. Simulated
-    here by shrinking the per-partition byte targets so the small test
-    inputs count as 'big'; the conf is restored after the build and the
-    cap bounds the width."""
-    import timefence_spark.engine as eng
-
-    users_path, txns_path, labels_path = users_feat_labels
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    # Make every input byte expensive: shrink target drops below any
-    # real file, raise target of 1 KB makes these MB-scale inputs ask
-    # for hundreds of partitions; the cap must bound it.
-    monkeypatch.setattr(eng, "_TUNE_BYTES_PER_PARTITION", 1)
-    monkeypatch.setattr(eng, "_TUNE_RAISE_BYTES_PER_PARTITION", 1)
-    monkeypatch.setattr(eng, "_TUNE_MAX_PARTITIONS", 64)
-    res = tf.build(
-        _labels(labels_path), [_country_feature(users_path)], None,
-        spark=spark,
-    )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    tuned_lines = [l for l in res.sql.splitlines() if "tuned" in l]
-    assert tuned_lines and f"{before} -> 64" in tuned_lines[0]
-    assert res.stats.row_count == 50

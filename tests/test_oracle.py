@@ -47,7 +47,8 @@ REPRESENTATIVE_QUERIES = [
     "line_dedup_hash", "media_decode_jpeg", "media_dedup",
     "minhash_dedup", "mmr_rerank", "ngram_freq", "ngram_nll",
     "pack_sequences", "pii_redact", "pit_composite_keys", "pit_embargo",
-    "pit_multi_single_pass", "pit_strict", "rolling_spend_30d",
+    "pit_events_keymap", "pit_inclusive", "pit_multi_single_pass",
+    "pit_skew_bucketed", "pit_staleness", "pit_strict", "rolling_spend_30d",
     "semantic_dup_grouped", "streaming_asof", "streaming_near_dedup",
     "strip_html", "temperature_mix", "text_token_stats", "train_bpe_gpt2",
     "train_unigram", "trigram_nll", "unigram_encode", "unigram_nll",

@@ -316,6 +316,44 @@ def test_build_selects_zero_join_single_pass_plan(spark, sf_dir):
     ), f"single-pass build must have zero joins, got {s}"
 
 
+def test_skew_bucket_build_has_no_row_id_recombination(spark, sf_dir):
+    """A skew_bucket build under one key mapping takes the same zero-join
+    plan as the plain build: the label row rides through ONE bucketed
+    Window, and the only join is the cross-bucket carry on (key, bucket).
+    No spine row id, no checkpointed spine and no per-feature
+    recombination join may appear."""
+    import timefence_spark as tf
+    from timefence_spark.operators.asof import ROW_ID
+    from timefence_spark.plans import _full_qe_str, physical_summary
+
+    labels = tf.Labels(
+        path=f"{sf_dir}/orders.parquet", keys="o_custkey",
+        label_time="o_orderdate", target="o_totalprice",
+    )
+    src = tf.Source(
+        f"{sf_dir}/orders.parquet", keys="o_custkey", timestamp="o_orderdate"
+    )
+    feats = [
+        tf.Feature(
+            src,
+            sql=(
+                f"SELECT o_custkey, o_orderdate AS feature_time, "
+                f"MAX(o_totalprice)*{i} AS v{i} FROM {{source}} GROUP BY 1,2"
+            ),
+            name=f"f{i}", embargo=f"{i}d", on_duplicate="keep_any",
+        )
+        for i in (1, 2)
+    ]
+    res = tf.build(labels, feats, None, skew_bucket="90d", spark=spark)
+    assert "-- recombine: none (zero-join single-pass plan)" in res.sql
+    plan = _full_qe_str(res.dataframe)
+    assert ROW_ID not in plan, "spine row id reached the bucketed build plan"
+    assert "ExistingRDD" not in plan, "bucketed build checkpointed the spine"
+    s = physical_summary(res.dataframe)
+    joins = s.broadcast_joins + s.sort_merge_joins + s.nested_loop_joins
+    assert joins == 1, f"expected only the carry join, got {s}"
+
+
 def test_in_window_dup_flags_share_the_window(spark):
     """Round 13: the in-window duplicate counter (pit_match_multi
     dup_track) must ride the EXISTING window pass — the lag/lead flag

@@ -687,19 +687,53 @@ def bucket_scenario(draw):
     return n_entities, feats, labels, embargo_s, lookback_s, strict, bucket_s
 
 
-@pytest.mark.slow
-@settings(
-    max_examples=int(os.environ.get("TF_BUCKET_EXAMPLES", "200")),
-    deadline=None,
-    suppress_health_check=[
-        HealthCheck.too_slow,
-        HealthCheck.function_scoped_fixture,
-    ],
-)
-@given(s=bucket_scenario())
-def test_skew_bucket_boundary_sweep_matches_brute_force(spark, s):
-    n_entities, feats, labels, embargo_s, lookback_s, strict, bucket_s = s
+@st.composite
+def multi_bucket_scenario(draw):
+    """bucket_scenario plus a second feature table with its own embargo,
+    for the grouped union kernel: the feature-side embargo shift moves the
+    two features' sort times (and so their buckets) differently."""
+    n_entities, feats, labels, embargo_s, lookback_s, strict, bucket_s = draw(
+        bucket_scenario()
+    )
+    feats2 = draw(
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=120),
+                st.integers(min_value=0, max_value=5),
+            ),
+            min_size=0,
+            max_size=25,
+        )
+    )
+    embargo2_s = draw(st.sampled_from([0, 1, 4, 9]))
+    return (
+        n_entities,
+        [(feats, embargo_s), (feats2, embargo2_s)],
+        labels,
+        lookback_s,
+        strict,
+        bucket_s,
+    )
 
+
+def _brute_force_asof(feat_rows, label_rows, embargo_s, lookback_s, strict):
+    """Per-label spec: latest in-window feature, ties by max value."""
+    expected = {}
+    for li, ent, lt in label_rows:
+        upper = lt - dt.timedelta(seconds=embargo_s)
+        lower = lt - dt.timedelta(seconds=lookback_s)
+        candidates = [
+            (ft, v)
+            for (fent, ft, v) in feat_rows
+            if fent == ent
+            and (ft < upper if strict else ft <= upper)
+            and ft >= lower
+        ]
+        expected[li] = max(candidates) if candidates else None
+    return expected
+
+
+def _bucket_frames(spark, n_entities, feats, labels):
     feat_rows = [
         (i % n_entities, BASE + dt.timedelta(seconds=off), float(v))
         for i, (off, v) in enumerate(feats)
@@ -717,20 +751,27 @@ def test_skew_bucket_boundary_sweep_matches_brute_force(spark, s):
     label_df = spark.createDataFrame(
         label_rows, "label_id int, entity int, lt timestamp_ntz"
     )
+    return feat_rows, label_rows, feat_df, label_df
 
-    # Per-label spec: latest in-window feature, ties by max value.
-    expected = {}
-    for li, ent, lt in label_rows:
-        upper = lt - dt.timedelta(seconds=embargo_s)
-        lower = lt - dt.timedelta(seconds=lookback_s)
-        candidates = [
-            (ft, v)
-            for (fent, ft, v) in feat_rows
-            if fent == ent
-            and (ft < upper if strict else ft <= upper)
-            and ft >= lower
-        ]
-        expected[li] = max(candidates) if candidates else None
+
+@pytest.mark.slow
+@settings(
+    max_examples=int(os.environ.get("TF_BUCKET_EXAMPLES", "200")),
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow,
+        HealthCheck.function_scoped_fixture,
+    ],
+)
+@given(s=bucket_scenario())
+def test_skew_bucket_boundary_sweep_matches_brute_force(spark, s):
+    n_entities, feats, labels, embargo_s, lookback_s, strict, bucket_s = s
+    feat_rows, label_rows, feat_df, label_df = _bucket_frames(
+        spark, n_entities, feats, labels
+    )
+    expected = _brute_force_asof(
+        feat_rows, label_rows, embargo_s, lookback_s, strict
+    )
 
     out = asof_join(
         label_df,
@@ -759,6 +800,57 @@ def test_skew_bucket_boundary_sweep_matches_brute_force(spark, s):
             f"label {row.label_id} bucket_s={bucket_s} embargo={embargo_s} "
             f"lookback={lookback_s} strict={strict}: expected {exp}, got {got}"
         )
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow,
+        HealthCheck.function_scoped_fixture,
+    ],
+)
+@given(s=multi_bucket_scenario())
+def test_skew_bucket_multi_feature_sweep_matches_brute_force(spark, s):
+    """The grouped union kernel with a skew bucket: two features with mixed
+    embargos share one bucketed window and one carry table, and each
+    feature's match must still equal its own per-row brute force."""
+    from timefence_spark.operators.asof import pit_match_multi
+
+    n_entities, feat_specs, labels, lookback_s, strict, bucket_s = s
+    specs, expected = [], []
+    label_df = None
+    for fi, (feats, embargo_s) in enumerate(feat_specs):
+        feat_rows, label_rows, feat_df, label_df = _bucket_frames(
+            spark, n_entities, feats, labels
+        )
+        specs.append((f"f{fi}", feat_df, "ts", ["val"], embargo_s))
+        expected.append(
+            _brute_force_asof(feat_rows, label_rows, embargo_s, lookback_s, strict)
+        )
+
+    out = pit_match_multi(
+        label_df,
+        specs,
+        key_pairs=[("entity", "entity")],
+        label_time="lt",
+        lookback_s=lookback_s,
+        strict=strict,
+        row_id="label_id",
+        bucket_s=bucket_s,
+    ).collect()
+
+    assert len(out) == len(labels)
+    for row in out:
+        for fi, (_, embargo_s) in enumerate(feat_specs):
+            ft = row[f"f{fi}__feature_time"]
+            got = None if ft is None else (ft, row[f"f{fi}__val"])
+            exp = expected[fi][row.label_id]
+            assert got == exp, (
+                f"f{fi} label {row.label_id} bucket_s={bucket_s} "
+                f"embargo={embargo_s} lookback={lookback_s} strict={strict}: "
+                f"expected {exp}, got {got}"
+            )
 
 
 @st.composite

@@ -7,8 +7,9 @@ plan so Catalyst handles predicate pushdown, column pruning, join selection
 and AQE does runtime re-planning. The only physical decisions the engine owns
 are the ones Spark cannot infer:
 
-* as-of strategy per feature (broadcast range-join for small feature tables,
-  no-fanout union/last_value plan for big ones) — see operators/asof.py;
+* which as-of kernel runs: every union-strategy feature goes through the
+  grouped union/window kernel, ``strategy='join'`` features through the
+  range-join kernel, one feature at a time — see operators/asof.py;
 * a single localCheckpoint() of the label spine (pins the nondeterministic
   row id against recomputation — eviction-proof, unlike a cache) and a
   persist() of the final result (one materialization serving write + count
@@ -19,7 +20,6 @@ from __future__ import annotations
 
 import glob
 import logging
-import os
 import shutil
 import time
 import uuid
@@ -91,9 +91,6 @@ from timefence_spark.sources.readers import (
 logger = logging.getLogger(__name__)
 
 __version__ = "0.1.0"
-
-# Feature tables at or below this row count are broadcast in the PIT join.
-DEFAULT_BROADCAST_MAX_ROWS = 5_000_000
 
 
 # ---------------------------------------------------------------------------
@@ -307,11 +304,10 @@ def _validate_timezones(
 
 
 def _dup_check_agg(src_df: DataFrame, feature: Feature) -> DataFrame:
-    """(n_rows, dup_pairs) aggregation for one source — one shuffle, lazy."""
+    """dup_pairs aggregation for one source — one shuffle, lazy."""
     key_ts = [*feature.source_keys, feature.source.timestamp]
     grouped = src_df.groupBy(*key_ts).agg(F.count(F.lit(1)).alias("cnt"))
     return grouped.agg(
-        F.sum("cnt").alias("n_rows"),
         F.count(F.when(F.col("cnt") > 1, F.lit(1))).alias("dup_pairs"),
     )
 
@@ -378,7 +374,7 @@ def _null_subset(src_df: DataFrame, feat: Feature) -> DataFrame:
 def _batch_duplicate_checks(
     checks: list[tuple[str, DataFrame, Feature]],
     null_subset_checks: list[tuple[str, DataFrame, Feature]] = (),
-) -> tuple[dict[str, int], dict[str, int]]:
+) -> dict[str, int]:
     """Run every source's duplicate check as ONE Spark action.
 
     A 10-feature build used to pay 10 sequential aggregation jobs here
@@ -393,13 +389,11 @@ def _batch_duplicate_checks(
     dup_track); only their NULL-key/NULL-time rows — which that pass
     cannot see — are aggregated here, and their policy is applied later
     by the engine once the window metrics land. Returns
-    ({source_name: row_count}, {tag: null_subset_dup_pairs})."""
+    {tag: null_subset_dup_pairs}."""
     from functools import reduce
 
     branches = [
-        _dup_check_agg(src_df, feat).select(
-            F.lit(tag).alias("tag"), "n_rows", "dup_pairs"
-        )
+        _dup_check_agg(src_df, feat).select(F.lit(tag).alias("tag"), "dup_pairs")
         for tag, src_df, feat in checks
     ]
     if null_subset_checks:
@@ -430,24 +424,17 @@ def _batch_duplicate_checks(
         )
         branches.append(
             grouped.groupBy("tag").agg(
-                F.sum("cnt").alias("n_rows"),
                 F.count(F.when(F.col("cnt") > 1, F.lit(1))).alias("dup_pairs"),
             )
         )
     if not branches:
-        return {}, {}
+        return {}
     rows = reduce(lambda a, b: a.unionByName(b), branches).collect()
-    stats = {r["tag"]: (int(r["n_rows"] or 0), int(r["dup_pairs"] or 0)) for r in rows}
-    counts: dict[str, int] = {}
+    dup_pairs = {r["tag"]: int(r["dup_pairs"] or 0) for r in rows}
     for tag, src_df, feat in checks:
-        n_rows, dup_pairs = stats[tag]
-        counts[feat.source.name] = n_rows
-        _apply_dup_policy(src_df, feat, dup_pairs)
+        _apply_dup_policy(src_df, feat, dup_pairs[tag])
     # A source with zero NULL rows contributes no group row at all.
-    null_dups = {
-        tag: stats.get(tag, (0, 0))[1] for tag, _, _ in null_subset_checks
-    }
-    return counts, null_dups
+    return {tag: dup_pairs.get(tag, 0) for tag, _, _ in null_subset_checks}
 
 
 def _validate_splits(
@@ -563,47 +550,21 @@ def _compute_feature_df(
 
 _TUNE_BYTES_PER_PARTITION = 4 * 1024 * 1024
 _TUNE_MIN_PARTITIONS = 4
-# Scale-adaptive RAISE direction (round 14, VERDICT r13 item 8, guide
-# §2.2/§5): one shuffle partition per this many bytes of on-disk input
-# when the session width would leave sort partitions fatter than
-# execution memory. Packed numeric parquet expands ~4-6x when
-# deserialized into union/window sort rows, so the 3.1 GB 10M x 10
-# input through 32 partitions put ~850 MB per sort task against ~300 MB
-# of execution memory — the window stage spilled 34 GB per build
-# (measured; 64 partitions still spill ~34 GB, 256 spill ZERO).
-#
-# DEFAULT OFF (0 = disabled): on the bench host the spill lands in page
-# cache and costs almost nothing, while the 8x reduce-task count costs
-# a measured 10-20% of wall — a raise default would regress the local
-# bench to buy nothing locally. On clusters whose shuffle/spill media
-# are real disks, set TIMEFENCE_SHUFFLE_INPUT_BYTES_PER_PARTITION to
-# (input bytes x ~5 deserialization expansion / per-task execution
-# memory); ~12-16 MB reproduces the zero-spill 256-partition shape for
-# the 10M x 10 build. The cap bounds scheduler overhead either way.
-_TUNE_RAISE_BYTES_PER_PARTITION = int(
-    os.environ.get("TIMEFENCE_SHUFFLE_INPUT_BYTES_PER_PARTITION", 0)
-)
-_TUNE_MAX_PARTITIONS = 2048
 
 
 def _tuned_shuffle_partitions(
     spark: SparkSession, labels: Labels, flat_features: Sequence[Feature]
 ) -> int | None:
-    """Shuffle width scaled to the build's on-disk input bytes, or None
-    when any input is DataFrame-backed (sizing it would cost a job) or
-    sizing fails. A driver-side Hadoop listing only — no Spark job.
+    """A shuffle width SHRUNK to the build's on-disk input bytes, or None
+    when the session width is already small enough, any input is
+    DataFrame-backed (sizing it would cost a job) or sizing fails. A
+    driver-side Hadoop listing only — no Spark job.
 
-    Two directions, both derived from input size rather than a constant
-    tuned to any one host (the 100 TB rule: partitioning must follow the
-    data): tiny builds SHRINK to one partition per ~4 MB (floor 4) so a
-    100k-label build stops paying ~32 near-empty sort tasks per stage;
-    big builds RAISE (cap 2048) so the union/window sort partitions fit
-    execution memory instead of spilling — opt-in via
-    TIMEFENCE_SHUFFLE_INPUT_BYTES_PER_PARTITION because on the local
-    bench host spill is page-cache-absorbed while the extra reduce
-    tasks cost real wall (see _TUNE_RAISE_BYTES_PER_PARTITION). AQE's
-    partition coalescing still merges post-shuffle partitions that come
-    out small, so an overshooting raise estimate is self-correcting."""
+    Derived from input size rather than a constant tuned to any one host
+    (the 100 TB rule: partitioning must follow the data): tiny builds
+    shrink to one partition per ~4 MB (floor 4) so a 100k-label build
+    stops paying ~32 near-empty sort tasks per stage. Builds past the
+    session width keep it."""
     paths = [labels.path] + [f.source.path for f in flat_features]
     if any(p is None for p in paths):
         return None
@@ -621,18 +582,8 @@ def _tuned_shuffle_partitions(
         int(total // _TUNE_BYTES_PER_PARTITION) + 1,
     )
     current_s = spark.conf.get("spark.sql.shuffle.partitions")
-    if not current_s.isdigit():
+    if not current_s.isdigit() or shrink < int(current_s):
         return shrink  # caller applies it only when it differs
-    current = int(current_s)
-    if shrink < current:
-        return shrink
-    if _TUNE_RAISE_BYTES_PER_PARTITION > 0:
-        raise_to = min(
-            _TUNE_MAX_PARTITIONS,
-            int(total // _TUNE_RAISE_BYTES_PER_PARTITION) + 1,
-        )
-        if raise_to > current:
-            return raise_to
     return None
 
 
@@ -651,7 +602,6 @@ def build(
     progress: Callable[[str], None] | None = None,
     spark: SparkSession | None = None,
     strategy: str = "auto",
-    broadcast_max_rows: int = DEFAULT_BROADCAST_MAX_ROWS,
     output_partition_by: str | Sequence[str] | None = None,
     skew_bucket: str | timedelta | None = None,
     checkpoint_dir: str | Path | None = None,
@@ -660,15 +610,17 @@ def build(
 
     Lifecycle parity with reference build() (engine.py:933-1500); Spark
     extras: ``spark`` (session), ``strategy`` ('auto' | 'join' | 'union'
-    as-of plan selection), ``broadcast_max_rows`` (feature tables at or
-    below this size are broadcast), ``output_partition_by`` (write the
-    output as a Hive-partitioned parquet directory keyed by these columns —
+    as-of plan selection: 'auto' and 'union' take the union/window kernel
+    ``pit_match_multi``, 'join' the range-join kernel ``pit_range_join``,
+    which broadcasts feature tables Catalyst estimates small),
+    ``output_partition_by`` (write the output as a Hive-partitioned
+    parquet directory keyed by these columns —
     the 100 TB output path: readers get partition pruning, and no
     single-file coalesce bottleneck; requires a directory-style ``output``,
     not a ``.parquet`` file path), ``skew_bucket`` (duration, e.g. "30d":
     split hot entity keys into time buckets of this width inside the union
     as-of plan, bounding any single sort partition — see
-    operators/asof._asof_union_single_pass), ``checkpoint_dir`` (pin the
+    operators/asof.pit_match_multi), ``checkpoint_dir`` (pin the
     spine's row ids to RELIABLE storage instead of executor-local blocks —
     survives executor loss on long cluster builds; see
     timefence_spark._checkpoint and docs/concepts/scale.md).
@@ -797,7 +749,6 @@ def build(
     zero_join = (
         bool(flat_features)
         and resolved_strategy == "union"
-        and skew_bucket_s is None
         and len(key_mappings) == 1
         and len(flat_features) <= UNION_GROUP_MAX_FEATURES
     )
@@ -865,16 +816,14 @@ def build(
                 spark.conf.set("spark.sql.shuffle.partitions", str(tuned))
                 transcript.append(
                     f"-- shuffle partitions tuned {current} -> {tuned} "
-                    "(input-bytes-derived: shrink for tiny builds, raise "
-                    "for sort-spill avoidance on big ones; session-wide "
-                    "conf for this build's duration; restored after "
+                    "(input-bytes-derived shrink for tiny builds; "
+                    "session-wide conf for this build's duration; restored after "
                     "build — one build per SparkSession; use "
                     "spark.newSession() for concurrent builds)"
                 )
 
         # ---- Step 2: sources + feature tables --------------------------
         registered_sources: dict[str, DataFrame] = {}
-        source_counts: dict[str, int] = {}
         feature_tables: dict[str, tuple[DataFrame, list[str]]] = {}
         feature_cache_keys: list[str] = []
         feature_cache_status: dict[str, bool] = {}
@@ -895,7 +844,7 @@ def build(
         # (pit_match_multi dup_track): designated feature name ->
         # (null-subset tag, source df, feature). Eligibility = the
         # feature provably routes through pit_match_multi (build-level
-        # union strategy, no skew bucketing) as a row-preserving
+        # union strategy, bucketed or not) as a row-preserving
         # projection of its source (columns mode) with an orderable
         # payload (the in-window adjacency argument needs the payload
         # tie-break columns in the sort), and no store is attached
@@ -914,7 +863,6 @@ def build(
                 src_df = registered_sources[src_name]
                 in_window = (
                     store is None
-                    and skew_bucket_s is None
                     and resolved_strategy == "union"
                     and feat.mode == "columns"
                     and _payload_orderable(src_df, list(feat._columns))
@@ -934,8 +882,8 @@ def build(
         # 100K-label scale, and nothing before the first materialization
         # needs its result. _resolve_dup_checks() joins the thread — and
         # raises any TimefenceDuplicateError — before any side effect
-        # (feature-cache write, broadcast sizing, output write), so the
-        # fail-fast contract is ordering-identical where it matters.
+        # (feature-cache write, output write), so the fail-fast contract
+        # is ordering-identical where it matters.
         dup_future = None
         dup_pool = None
         if pending_checks or null_subset_checks:
@@ -957,9 +905,7 @@ def build(
             if dup_future is not None:
                 fut, dup_future = dup_future, None
                 try:
-                    counts, null_dups = fut.result()
-                    source_counts.update(counts)
-                    null_dup_results.update(null_dups)
+                    null_dup_results.update(fut.result())
                 finally:
                     dup_pool.shutdown(wait=False)
 
@@ -1013,10 +959,10 @@ def build(
 
         # ---- Step 3: point-in-time joins -------------------------------
         # Union-strategy features that share an entity-key mapping resolve
-        # in ONE union/window pass (pit_match_multi): the spine and every
-        # feature table shuffle once by key into a single Window operator,
-        # instead of one spine shuffle + window + recombination join per
-        # feature. The join strategy and the skew-bucketed variant keep the
+        # in ONE union/window pass (pit_match_multi, skew-bucketed or not):
+        # the spine and every feature table shuffle once by key into a
+        # single Window operator, instead of one spine shuffle + window +
+        # recombination join per feature. Only the join strategy keeps the
         # per-feature path.
         matched: dict[str, DataFrame] = {}
         strategies: dict[str, str] = {}
@@ -1058,22 +1004,9 @@ def build(
         for i, feat in enumerate(flat_features, 1):
             fdf, value_cols = feature_tables[feat.name]
             key_pairs = [(lk, feat.key_mapping.get(lk, lk)) for lk in labels.keys]
-            feat_strategy = strategy
-            if strategy == "auto":
-                # Union is the measured default at every shape (see
-                # operators/asof.pit_match); 'join' remains the explicit
-                # opt-in for extreme key skew.
-                feat_strategy = "union"
-            strategies[feat.name] = feat_strategy
-            if feat_strategy == "join":
-                # Broadcast sizing needs the source row counts — join the
-                # background duplicate-check action for them.
-                _resolve_dup_checks()
-            src_rows = source_counts.get(feat.source.name)
-            small = src_rows is not None and src_rows <= broadcast_max_rows
+            strategies[feat.name] = resolved_strategy
             transcript.append(
-                f"-- pit_match[{feat.name}] strategy={feat_strategy} "
-                f"broadcast={small and feat_strategy == 'join'} "
+                f"-- pit_match[{feat.name}] strategy={resolved_strategy} "
                 f"invariant: feature_time {op} {lt} - {format_duration(feat.embargo)} "
                 f"AND feature_time >= {lt} - {format_duration(max_lookback_td)}"
                 + (
@@ -1082,7 +1015,7 @@ def build(
                     else ""
                 )
             )
-            if feat_strategy == "union" and skew_bucket_s is None:
+            if resolved_strategy == "union":
                 union_groups.setdefault(tuple(key_pairs), []).append(feat)
                 continue
             _emit(f"Joining {feat.name} ({i}/{len(flat_features)})")
@@ -1097,9 +1030,7 @@ def build(
                 lookback_s=duration_seconds(max_lookback_td),
                 staleness_s=duration_seconds(max_staleness_td),
                 strict=(join == "strict"),
-                strategy=feat_strategy,
-                broadcast_feature=small and feat_strategy == "join",
-                bucket_s=skew_bucket_s,
+                strategy=resolved_strategy,
             )
             _submit_plan_probe([feat.name], matched[feat.name])
 
@@ -1153,6 +1084,7 @@ def build(
                 carry_left=zero_join,
                 dup_track=dup_track if any(dup_track) else None,
                 dup_observation=dup_obs,
+                bucket_s=skew_bucket_s,
             )
             group_outputs.append(gout)
             _submit_plan_probe([feat.name for feat in group_feats], gout)
